@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
+import scala.util.control.NonFatal
+
 /** Explicit release of superseded localCheckpoint state.
   *
   * `localCheckpoint` RDD blocks are otherwise only freed by the periodic-GC
@@ -22,6 +24,6 @@ object Lineage {
       df.queryExecution.logical.collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
       }.foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 }

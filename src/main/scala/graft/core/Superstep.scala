@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Per-superstep iteration metrics — the Spark analogue of the reference's
   * progress logging threaded through every algorithm
@@ -14,7 +15,11 @@ final case class SuperstepMetrics(
     iteration: Int,
     /** Algorithm-defined convergence norm (e.g. PageRank L1 delta). */
     deltaNorm: Double,
-    /** Rows that crossed the shuffle this superstep (gather messages). */
+    /** Messages (arc contributions) the superstep's gather emitted,
+      * counted before the map-side combine: an operator-side count such as
+      * the gather source's arc total (every rank-family member records
+      * that), not shuffle rows measured by a listener.
+      */
     messages: Long,
     /** Vertices whose state changed this superstep. */
     changed: Long,
@@ -202,7 +207,7 @@ final class IterationContext(
         .collect().map(_.getLong(1)).filter(_ > 0)
       if (sizes.isEmpty) 1.0
       else sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
-    } catch { case _: Throwable => 1.0 }
+    } catch { case NonFatal(_) => 1.0 }
   }
 
   def close(keepFinal: Boolean = true): Unit = {

@@ -16,43 +16,16 @@ import org.apache.spark.sql.functions._
   * directed graphs vertices outside any cycle's basin decay to 0, which
   * is the textbook behavior (use Katz/PageRank when that matters).
   *
-  * Scale shape — identical to [[PageRank.runFixed]]: one (id, x) state
-  * shuffle per superstep against the src-partitioned chunked adjacency,
-  * map-side partial sums absorb hub in-degree, ONE action per superstep
-  * (the squared-norm aggregate), lineage cut every superstep.
+  * Runs on [[RankLoop]] with the raw y as state: ‖y‖₂ is the square root
+  * of the sum of squares the superstep's aggregate returns, and xₜ = yₜ/‖yₜ‖₂
+  * is a per-vertex division inside the next gather weight and the result.
   */
 object Eigenvector {
 
   def runFixed(graph: Graph, iterations: Int): DataFrame = {
-    val spark = graph.spark
-    import spark.implicits._
-
-    val adj = graph.adjacency
-    var state = graph.outDegrees
-      .select($"id", lit(1.0).as("x"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val contribs = adj
-        .join(state.select($"id".as("src"), $"x"), Seq("src"))
-        .select(explode($"dsts").as("id"), $"x".as("c"))
-        .groupBy($"id")
-        .agg(sum($"c").as("contrib"))
-      val raw = state
-        .select($"id")
-        .join(contribs, Seq("id"), "left")
-        .select($"id", coalesce($"contrib", lit(0.0)).as("y"))
-        .localCheckpoint(true)
-      // one action per superstep: the squared norm
-      val nrmRow = raw.agg(sum($"y" * $"y")).head()
-      val nrm = if (nrmRow.isNullAt(0)) 0.0 else math.sqrt(nrmRow.getDouble(0))
-      val next = raw
-        .select($"id",
-          (if (nrm > 0) $"y" / lit(nrm) else lit(0.0)).as("x"))
-        .localCheckpoint(true)
-      graft.core.Lineage.release(state)
-      graft.core.Lineage.release(raw)
-      state = next
-    }
-    state.select($"id", $"x")
+    val adj = RankLoop.adjacency(graph.adjacency)
+    val r = RankLoop.run("eigenvector", graph.outDegrees.select(col("id"), lit(1.0).as("x")), iterations,
+      graph.numEdges) { (_, s) => RankLoop.Step(adj, RankLoop.scaled(col("x"), math.sqrt(s.l2sq)), c => c) }
+    r.state.select(col("id"), RankLoop.scaled(col("x"), math.sqrt(r.sums.last.l2sq)).as("x"))
   }
 }

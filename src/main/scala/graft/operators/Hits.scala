@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.core.{AdjChunk, Graph, Lineage}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.core.Graph
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (Kleinberg's hubs & authorities) — the other classic link-graph
   * eigenvector pair next to PageRank: a page is a good AUTHORITY if good
@@ -18,21 +17,13 @@ import org.apache.spark.storage.StorageLevel
   * argument is an order-dependent dot product. An edgeless direction
   * normalizes to all-zeros rather than dividing by zero.
   *
-  * Scale shape matches [[PageRank.run]] exactly — in BOTH directions:
-  *  - the a-step gathers through the persisted forward adjacency
-  *    (partitioned by src), the h-step through the persisted TRANSPOSE
-  *    adjacency (partitioned by ITS src = the forward dst) — HyperBall's
-  *    transpose-push pattern. Each half-step therefore shuffles only the
-  *    16-byte (id, score) state rows; the arc table never re-shuffles.
-  *    (The r3 version joined one flat arc table on `dst` for the h-step,
-  *    re-shuffling all E arcs per half-step — O(E) vs O(V) state.)
-  *  - hub successor lists are pre-chunked (`AdjChunk` salting) and hub
-  *    in-degree is absorbed by map-side partial sums;
-  *  - ONE action per half-step: the gather is cached lazily and the L1
-  *    normalizer is folded into the checkpointed plan as a 1-row cross
-  *    join — the normalizer's aggregate stage reads the cached gather, so
-  *    the join executes once and no separate driver action is spent on
-  *    the scalar (the r3 version spent 2 actions per half-step).
+  * Each half-step is one superstep of [[RankLoop]]: the a-step gathers
+  * through the forward adjacency, the h-step through the TRANSPOSE
+  * adjacency (HyperBall's transpose-push pattern), so neither re-shuffles
+  * the arcs. The state keeps the raw sums; the L1 normalization divides a
+  * raw score by the sum the previous superstep's aggregate returned, per
+  * vertex, before it is gathered or returned (`score / Σ score`, as an
+  * eager normalizing pass would).
   */
 object Hits {
 
@@ -41,73 +32,20 @@ object Hits {
     iterate(graph, iterations, divideByDeg = false)
 
   /** The shared a-then-h loop: plain-sum gathers for HITS, degree-
-    * normalized gathers ([[Salsa]]'s random-surfer splitting) when
-    * `divideByDeg` — identical superstep shape either way.
+    * normalized gathers ([[Salsa]]'s random-surfer splitting, the degree
+    * riding in each `AdjChunk` row) when `divideByDeg`.
     */
   private[graft] def iterate(graph: Graph, iterations: Int,
                              divideByDeg: Boolean): DataFrame = {
     require(iterations >= 1, "HITS/SALSA needs at least one iteration")
-    val spark = graph.spark
-    import spark.implicits._
-
-    val adj = graph.adjacency            // gather direction of the a-step
-    val tadj = graph.transposeAdjacency  // gather direction of the h-step
-    val verts = graph.vertices.toDF("id")
-
-    var hub = verts.select($"id", lit(1.0).as("h")).localCheckpoint(true)
-    var auth: DataFrame = null
-    for (_ <- 1 to iterations) {
-      val aNext = halfStep(verts, adj, hub, "h", "a", divideByDeg)
-      if (auth != null) Lineage.release(auth)
-      auth = aNext
-      val hNext = halfStep(verts, tadj, auth, "a", "h", divideByDeg)
-      Lineage.release(hub)
-      hub = hNext
+    // superstep i gathers a (odd i, forward) or h (even i, transpose)
+    val dirs = Seq(graph.transposeAdjacency, graph.adjacency).map(RankLoop.adjacency)
+    val r = RankLoop.run(if (divideByDeg) "salsa" else "hits",
+      graph.vertices.toDF("id").withColumn("x", lit(1.0)), 2 * iterations, graph.numEdges) { (i, s) =>
+      val in = RankLoop.scaled(col("x"), s.l1)
+      RankLoop.Step(dirs(i % 2), if (divideByDeg) in / col("deg") else in, c => c)
     }
-    hub.join(auth, Seq("id")).select($"id", $"h".as("hub"), $"a".as("auth"))
-  }
-
-  /** One half-step: out(id) = Σ over the gather adjacency of the in-score,
-    * L1-normalized; vertices with no gather row coalesce to 0 before
-    * normalization. Exposed package-private so `PlanSpec` can pin the
-    * physical shape (no arc-side exchange — the gather adjacency is read
-    * from its persisted src-partitioned form in both directions).
-    */
-  private[graft] def halfStep(verts: DataFrame, gather: Dataset[AdjChunk],
-                              state: DataFrame, inCol: String, outCol: String,
-                              divideByDeg: Boolean = false): DataFrame = {
-    val spark = verts.sparkSession
-    import spark.implicits._
-    val all = gatherScores(verts, gather, state, inCol, outCol, divideByDeg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val normed = all
-      .crossJoin(all.agg(sum(col(outCol)).as("_s")))
-      .select($"id",
-        when($"_s" > 0, col(outCol) / $"_s").otherwise(lit(0.0)).as(outCol))
-      .localCheckpoint(true)
-    all.unpersist(blocking = false)
-    normed
-  }
-
-  /** The (lazy) gather plan of one half-step — out(id) = Σ in-score over
-    * the gather adjacency, 0-coalesced over all vertices. Separate from
-    * the checkpointing wrapper so `PlanSpec` can pin its physical shape.
-    */
-  private[graft] def gatherScores(verts: DataFrame, gather: Dataset[AdjChunk],
-                                  state: DataFrame, inCol: String, outCol: String,
-                                  divideByDeg: Boolean = false): DataFrame = {
-    val spark = verts.sparkSession
-    import spark.implicits._
-    // `deg` is the chunk's FULL source degree (AdjChunk carries it per
-    // chunk), so the degree-normalized contribution needs no extra join.
-    val contrib = if (divideByDeg) $"s" / $"deg" else $"s"
-    val raw = gather
-      .join(state.select($"id".as("src"), col(inCol).as("s")), Seq("src"))
-      .select(explode($"dsts").as("id"), contrib.as("s"))
-      .groupBy($"id")
-      .agg(sum($"s").as(outCol))
-    verts
-      .join(raw, Seq("id"), "left")
-      .select($"id", coalesce(col(outCol), lit(0.0)).as(outCol))
+    r.state.select(col("id"), RankLoop.scaled(col("x"), r.sums.last.l1).as("hub"),
+      RankLoop.scaled(col("prev"), r.sums(r.sums.size - 2).l1).as("auth"))
   }
 }

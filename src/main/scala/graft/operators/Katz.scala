@@ -16,18 +16,7 @@ import org.apache.spark.sql.functions._
   * by rank-conserving flow. α must stay below 1/λ_max(A) for the infinite
   * series to converge; the fixed-iteration form used here (the gate face)
   * is exact algebra at any α, so both engines unroll the identical k
-  * stages.
-  *
-  * Complements the rank family the engine already carries (PageRank /
-  * PPR / TrustRank / HITS / SALSA) with the classic walk-counting
-  * centrality; the reference's rank loop shape is the same gather the
-  * PageRank superstep uses (hyperball_impl.rs:775-949 gather→scatter).
-  *
-  * Scale shape — identical to [[PageRank.runFixed]]: adjacency stays
-  * persisted hash-partitioned by src (hub out-degree pre-split across
-  * chunks), only the (id, x) state shuffles per superstep, the
-  * contribution sum partial-aggregates map-side (hub in-degree never
-  * concentrates raw messages), and lineage is cut every superstep.
+  * stages. Runs on [[RankLoop]]: gather weight `x`, update `β + α·contrib`.
   */
 object Katz {
 
@@ -37,29 +26,9 @@ object Katz {
       alpha: Double = 0.05,
       beta: Double = 1.0
   ): DataFrame = {
-    val spark = graph.spark
-    import spark.implicits._
-
-    val adj = graph.adjacency
-    var state = graph.outDegrees
-      .select($"id", lit(beta).as("x"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val contribs = adj
-        .join(state.select($"id".as("src"), $"x"), Seq("src"))
-        .select(explode($"dsts").as("id"), $"x".as("c"))
-        .groupBy($"id")
-        .agg(sum($"c").as("contrib"))
-      val next = state
-        .select($"id")
-        .join(contribs, Seq("id"), "left")
-        .select(
-          $"id",
-          (lit(beta) + lit(alpha) * coalesce($"contrib", lit(0.0))).as("x"))
-        .localCheckpoint(true)
-      graft.core.Lineage.release(state)
-      state = next
-    }
-    state.select($"id", $"x")
+    val adj = RankLoop.adjacency(graph.adjacency)
+    RankLoop.run("katz", graph.outDegrees.select(col("id"), lit(beta).as("x")), iterations, graph.numEdges) {
+      (_, _) => RankLoop.Step(adj, col("x"), c => lit(beta) + lit(alpha) * c)
+    }.state.select("id", "x")
   }
 }

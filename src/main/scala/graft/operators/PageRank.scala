@@ -1,35 +1,20 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext, SuperstepMetrics}
-import org.apache.spark.sql.DataFrame
+import graft.core.{CheckpointConfig, Graph, SuperstepMetrics}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Power-iteration PageRank with dangling-mass redistribution and L1-delta
-  * convergence, over CSR-style chunked adjacency.
+  * convergence, on the rank family's one superstep loop ([[RankLoop]]).
   *
   * Semantics (textbook; matches the north_star contract):
   *   r₀(v)   = 1/n
   *   rₜ₊₁(v) = (1−α)/n + α·( Σ_{(u,v)∈E} rₜ(u)/outdeg(u)  +  Dₜ/n )
   * where Dₜ = Σ_{outdeg(u)=0} rₜ(u) is the dangling mass; convergence when
-  * Σ_v |rₜ₊₁(v) − rₜ(v)| < tol.
-  *
-  * The iterate-to-fixpoint shape mirrors the reference's HyperBall loop
-  * (`/root/reference/src/algo/hyperball/hyperball_impl.rs:775-949`): its
-  * gather over successors becomes `adjacency ⋈ state → explode → groupBy
-  * (dst) sum` — a sparse gather-scatter as shuffle-hash-join + partial
-  * aggregation. Each superstep runs exactly ONE action: a single aggregate
-  * computing the L1 delta, the next dangling mass, and the changed count,
-  * so the per-iteration job count stays constant at scale.
-  *
-  * Scale properties:
-  *  - adjacency is persisted hash-partitioned by src; only the (id, rank)
-  *    state shuffles per superstep;
-  *  - hub out-degree is pre-split across adjacency chunks (salting), so the
-  *    explode never emits an unbounded row batch from one task row;
-  *  - hub *in*-degree is absorbed by partial (map-side) aggregation of the
-  *    contribution sum — sum is associative, so skew never concentrates
-  *    raw messages on one reducer.
+  * Σ_v |rₜ₊₁(v) − rₜ(v)| < tol. Float order: `(1−α)/n + α·D/n` is one
+  * driver-side double, then `base + α·contrib` per vertex — the order the
+  * hash-verified `g_pagerank5` oracle pins.
   */
 object PageRank {
 
@@ -67,76 +52,28 @@ object PageRank {
     if (n == 0) {
       return Result(spark.emptyDataset[(Long, Double)].toDF("id", "rank"), 0, converged = true, Nil)
     }
-    val adj = graph.adjacency
     // (id, deg) persisted once; deg==0 marks dangling vertices.
     val verts = graph.outDegrees.persist(StorageLevel.MEMORY_AND_DISK)
-
-    val ctx = new IterationContext("pagerank", checkpoint, verbose = verbose, suspendAdaptive = true)
-    try {
-      val resumed = ctx.resume(spark)
-      var state = resumed.map(_._1).getOrElse {
-        init match {
-          case Some(r0) =>
-            val seeded = verts
-              .join(r0.select($"id", $"rank".cast("double").as("r0")), Seq("id"), "left")
-              .select($"id", coalesce($"r0", lit(1.0 / n)).as("r"), $"deg")
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val tot = seeded.agg(sum($"r")).head().getDouble(0)
-            require(tot > 0, "init ranks must have positive total mass")
-            val out = ctx.init(seeded.select($"id", ($"r" / tot).as("rank"), $"deg"))
-            seeded.unpersist()
-            out
-          case None =>
-            ctx.init(verts.select($"id", lit(1.0 / n).as("rank"), $"deg"))
-        }
-      }
-      var iter = resumed.map(_._2).getOrElse(0)
-      // Dangling mass of the CURRENT state; for iteration>0 resumes this is
-      // recomputed once (cheap single aggregate) instead of persisted.
-      var dangling = {
-        val r = state.agg(sum(when($"deg" === 0, $"rank"))).head()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      }
-
-      var converged = false
-      while (!converged && iter < maxIter) {
-        iter += 1
-        val contribs = adj
-          .join(state.select($"id".as("src"), $"rank"), Seq("src"))
-          .select(explode($"dsts").as("id"), ($"rank" / $"deg").as("c"))
-          .groupBy($"id")
-          .agg(sum($"c").as("contrib"))
-
-        val base = (1.0 - alpha) / n + alpha * dangling / n
-        val next = state
-          .select($"id", $"rank".as("prevRank"), $"deg")
-          .join(contribs, Seq("id"), "left")
-          .select(
-            $"id",
-            (lit(base) + lit(alpha) * coalesce($"contrib", lit(0.0))).as("rank"),
-            $"deg",
-            $"prevRank")
-        val cutNext = ctx.cut(next)
-
-        // ONE action per superstep: delta, next dangling mass, changed count.
-        val row = cutNext.agg(
-          sum(abs($"rank" - $"prevRank")),
-          sum(when($"deg" === 0, $"rank")),
-          sum(when(abs($"rank" - $"prevRank") > 0, 1L).otherwise(0L))
-        ).head()
-        val delta = row.getDouble(0)
-        dangling = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-        val changed = if (row.isNullAt(2)) 0L else row.getLong(2)
-
-        state = ctx.advance(iter, cutNext.select($"id", $"rank", $"deg"), delta, graph.numEdges, changed)
-        converged = delta < tol
-      }
-
-      verts.unpersist()
-      ctx.close()
-      Result(state.select($"id", $"rank"), iter, converged, ctx.history.toSeq)
-    } finally ctx.restoreAqe()
+    def seed: DataFrame = init match {
+      case Some(r0) =>
+        val seeded = verts
+          .join(r0.select($"id", $"rank".cast("double").as("r0")), Seq("id"), "left")
+          .select($"id", coalesce($"r0", lit(1.0 / n)).as("r"), $"deg")
+        val tot = seeded.agg(sum($"r")).head().getDouble(0)
+        require(tot > 0, "init ranks must have positive total mass")
+        seeded.select($"id", ($"r" / tot).as("x"), $"deg")
+      case None => verts.select($"id", lit(1.0 / n).as("x"), $"deg")
+    }
+    val adj = RankLoop.adjacency(graph.adjacency)
+    val r = RankLoop.run("pagerank", seed, maxIter, graph.numEdges, Some($"deg" === 0), tol,
+      checkpoint, verbose) { (_, s) => RankLoop.Step(adj, $"x" / $"deg", uniform(alpha, n, s)) }
+    verts.unpersist()
+    Result(r.state.select($"id", $"x".as("rank")), r.iterations, r.converged, r.history)
   }
+
+  /** The uniform-teleport update `(1−α)/n + α·D/n + α·contrib`. */
+  private def uniform(alpha: Double, n: Long, s: RankLoop.Sums)(c: Column): Column =
+    lit((1.0 - alpha) / n + alpha * s.dangling / n) + lit(alpha) * c
 
   /** Fixed-iteration variant (no convergence action fusion needed for the
     * oracle-checked queries; k supersteps, then return).
@@ -154,14 +91,12 @@ object PageRank {
     *
     * where W(u) is u's total out-weight and Dₜ the dangling (W=0) mass.
     * Parallel arcs are legal — their weights add. With all weights equal
-    * on a simple graph this reduces to [[run]]'s semantics exactly.
+    * on a simple graph this reduces to [[run]]'s semantics exactly. The
+    * gather weight keeps the oracle's `(rank·w)/W` float order.
     *
-    * Scale shape: the weighted edge table is repartitioned by src ONCE
-    * and persisted for the loop (the chunked [[Graph]] adjacency carries
-    * no weights — this operator owns its layout); per superstep only the
-    * (id, rank) state shuffles to meet it, the contribution sum
-    * partial-aggregates map-side, one driver action per superstep (the
-    * dangling mass).
+    * The weighted edge table is repartitioned by src ONCE and persisted as
+    * the loop's gather source (the chunked [[Graph]] adjacency carries no
+    * weights — this operator owns its layout).
     */
   def runWeightedFixed(
       edges: DataFrame,
@@ -183,42 +118,14 @@ object PageRank {
       .select($"id", coalesce($"ow", lit(0.0)).as("ow"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
-    if (n == 0) {
-      e.unpersist(); verts.unpersist()
-      return verts.select($"id", lit(0.0).as("rank"))
-    }
-
-    var state = verts
-      .select($"id", lit(1.0 / n).as("rank"), $"ow")
-      .localCheckpoint(true)
-    var dangling = {
-      val r = state.agg(sum(when($"ow" === 0, $"rank"))).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(state.select($"id".as("src"), $"rank", $"ow"), Seq("src"))
-        .filter($"ow" > 0)
-        .select($"dst".as("id"), ($"rank" * $"w" / $"ow").as("c"))
-        .groupBy($"id")
-        .agg(sum($"c").as("contrib"))
-      val base = (1.0 - alpha) / n + alpha * dangling / n
-      val next = state
-        .select($"id", $"ow")
-        .join(contribs, Seq("id"), "left")
-        .select(
-          $"id",
-          (lit(base) + lit(alpha) * coalesce($"contrib", lit(0.0))).as("rank"),
-          $"ow")
-        .localCheckpoint(true)
-      val r = next.agg(sum(when($"ow" === 0, $"rank"))).head()
-      dangling = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      graft.core.Lineage.release(state)
-      state = next
+    val src = RankLoop.Source(e, $"dst", Seq("ow"))
+    val r = RankLoop.run("pagerank-weighted", verts.select($"id", lit(1.0 / n).as("x"), $"ow"), iterations,
+      e.count(), Some($"ow" === 0)) { (_, s) =>
+      RankLoop.Step(src, when($"ow" > 0, $"x" * $"w" / $"ow"), uniform(alpha, n, s))
     }
     e.unpersist()
     verts.unpersist()
-    state.select($"id", $"rank")
+    r.state.select($"id", $"x".as("rank"))
   }
 
   /** Personalized PageRank: teleport concentrated on a source set instead
@@ -230,14 +137,9 @@ object PageRank {
     *   rₜ₊₁(v) = (1−α)·s(v) + α·( Σ_{(u,v)∈E} rₜ(u)/outdeg(u) + Dₜ·s(v) )
     *
     * Dangling mass goes to the TELEPORT vector (strongly-preferential
-    * PPR), so Σ_v r(v) = 1 every iteration. Kept separate from [[run]]
-    * rather than parameterized: the uniform path's float expression order
-    * is pinned by the hash-verified `g_pagerank5` oracle, and
-    * `(1−α)/n + α·D/n` vs `((1−α) + α·D)·s` differ in last-ulp.
-    *
-    * Same scale shape as [[run]]: one state shuffle per superstep, hub
-    * out-degree pre-split in adjacency chunks, map-side partial sums for
-    * hub in-degree, single action per superstep.
+    * PPR), so Σ_v r(v) = 1 every iteration. Its update keeps its own float
+    * order rather than sharing [[run]]'s: `(1−α)/n + α·D/n` vs
+    * `((1−α) + α·D)·s` differ in last-ulp.
     */
   def runPersonalized(
       graph: Graph,
@@ -248,7 +150,6 @@ object PageRank {
     val spark = graph.spark
     import spark.implicits._
 
-    val adj = graph.adjacency
     val nSrc = sources.select($"id").distinct().count()
     require(nSrc > 0, "personalized PageRank needs a non-empty source set")
     val verts = graph.outDegrees
@@ -257,34 +158,13 @@ object PageRank {
       .select($"id", $"deg",
         when($"inS", lit(1.0 / nSrc)).otherwise(lit(0.0)).as("tele"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var state = verts.select($"id", $"tele".as("rank"), $"deg", $"tele")
-      .localCheckpoint(true)
-    var dangling = {
-      val r = state.agg(sum(when($"deg" === 0, $"rank"))).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    for (_ <- 1 to iterations) {
-      val contribs = adj
-        .join(state.select($"id".as("src"), $"rank"), Seq("src"))
-        .select(explode($"dsts").as("id"), ($"rank" / $"deg").as("c"))
-        .groupBy($"id")
-        .agg(sum($"c").as("contrib"))
-      val next = state
-        .select($"id", $"deg", $"tele")
-        .join(contribs, Seq("id"), "left")
-        .select($"id",
-          (lit(1.0 - alpha) * $"tele"
-            + lit(alpha) * (coalesce($"contrib", lit(0.0)) + lit(dangling) * $"tele")).as("rank"),
-          $"deg", $"tele")
-        .localCheckpoint(true)
-      // one action: next dangling mass
-      val r = next.agg(sum(when($"deg" === 0, $"rank"))).head()
-      dangling = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      graft.core.Lineage.release(state)
-      state = next
+    val adj = RankLoop.adjacency(graph.adjacency)
+    val r = RankLoop.run("ppr", verts.select($"id", $"tele".as("x"), $"deg", $"tele"), iterations,
+      graph.numEdges, Some($"deg" === 0)) { (_, s) =>
+      RankLoop.Step(adj, $"x" / $"deg",
+        c => lit(1.0 - alpha) * $"tele" + lit(alpha) * (c + lit(s.dangling) * $"tele"))
     }
     verts.unpersist()
-    state.select($"id", $"rank")
+    r.state.select($"id", $"x".as("rank"))
   }
 }

@@ -17,13 +17,9 @@ import org.apache.spark.sql.DataFrame
   * to run both. Each half-step is additionally L1-normalized (mass lost
   * at dangling vertices — no out-edges forward, no in-edges backward — is
   * rescaled away), so score vectors stay comparable across iterations and
-  * cross-engine; an edgeless direction normalizes to all-zeros.
-  *
-  * Scale shape: identical to [[Hits]] — both gathers go through the
-  * persisted (transpose) adjacency, the degree the normalization divides
-  * by rides in the `AdjChunk` rows (no extra degree join), only the
-  * 16-byte (id, score) state shuffles per half-step, one action per
-  * half-step.
+  * cross-engine; an edgeless direction normalizes to all-zeros. Runs the
+  * [[Hits]] loop; the gather weight is `(score / Σ score) / deg`, the
+  * normalization first.
   */
 object Salsa {
 

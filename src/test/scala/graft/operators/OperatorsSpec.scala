@@ -208,6 +208,86 @@ class PageRankSpec extends AnyFunSuite {
     assert(got(10L) == 0.0 && got(11L) == 0.0)
     assert(got(0L) > got(1L) && got(1L) > 0.0)
   }
+
+  /** Every rank-family member as (name, gathers per iteration, run k). */
+  private def rankFamily(g: Graph): Seq[(String, Int, Int => Any)] = {
+    import spark.implicits._
+    val weighted = Fixtures.bucket9.map { case (s, d) => (s, d, 1.0 + (s + d) % 3) }
+      .toDF("src", "dst", "weight")
+    Seq(
+      ("PageRank.run", 1, k => PageRank.run(g, tol = 0.0, maxIter = k)),
+      ("PageRank.runPersonalized", 1, k => PageRank.runPersonalized(g, Seq(0L, 5L).toDF("id"), k)),
+      ("PageRank.runWeightedFixed", 1, k => PageRank.runWeightedFixed(weighted, k)),
+      ("Hits.run", 2, k => Hits.run(g, k)),
+      ("Salsa.run", 2, k => Salsa.run(g, k)),
+      ("Katz.runFixed", 1, k => Katz.runFixed(g, k)),
+      ("Eigenvector.runFixed", 1, k => Eigenvector.runFixed(g, k)))
+  }
+
+  test("every rank-family member spends PageRank.run's jobs per gather") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val g = Graph.fromPairs(spark, Fixtures.bucket9)
+    g.numEdges; g.numVertices; g.adjacency.count(); g.transposeAdjacency.count()
+    val sc = spark.sparkContext
+    val group = "rank-family-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    def jobsOf(run: => Any): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      val before = jobs.get
+      run
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get - before
+    }
+    // Broadcast joins and runtime bloom filters each run a job of their
+    // own, planned from estimated sizes; with both off the count is the
+    // loop's own driver actions.
+    val planned = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
+    val saved = planned.map { case (k, v) => val was = spark.conf.get(k); spark.conf.set(k, v); k -> was }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "rank-family jobs per gather")
+    try {
+      // k and k+2 iterations: the difference is 2 iterations' gathers
+      val perGather = rankFamily(g).map { case (name, gathers, run) =>
+        name -> (jobsOf(run(3)) - jobsOf(run(1))).toDouble / (2 * gathers)
+      }
+      val pr = perGather.head._2
+      assert(pr == 1.0, s"PageRank.run spends $pr jobs per gather")
+      perGather.foreach { case (name, j) =>
+        assert(j == pr, s"$name spends $j jobs per gather, PageRank.run $pr")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
+
+  test("rank-family members leave spark.sql.adaptive.enabled as they found it, also on a throw") {
+    val g = Graph.fromPairs(spark, Fixtures.bucket9)
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(key)
+    try {
+      for (((name, _, run), i) <- rankFamily(g).zipWithIndex) {
+        val found = (i % 2 == 0).toString
+        spark.conf.set(key, found)
+        run(1)
+        assert(spark.conf.get(key) == found, s"$name left AQE at ${spark.conf.get(key)}")
+      }
+      // A checkpoint dir beneath a regular file: the commit of superstep 1
+      // throws from inside the loop, after AQE was suspended.
+      val file = java.nio.file.Files.createTempFile("graft-aqe", ".txt")
+      spark.conf.set(key, "true")
+      intercept[Exception](PageRank.run(g, tol = 0.0, maxIter = 2,
+        checkpoint = Some(graft.core.CheckpointConfig(s"$file/ckpt"))))
+      assert(spark.conf.get(key) == "true")
+      java.nio.file.Files.delete(file)
+    } finally spark.conf.set(key, saved)
+  }
 }
 
 class LabelPropagationSpec extends AnyFunSuite {

@@ -113,24 +113,41 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("HITS half-step gathers through the persisted adjacency — no arc-side shuffle") {
+    import graft.operators.RankLoop
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.functions._
+    object Plans extends AdaptiveSparkPlanHelper
     val g = graft.core.Graph.fromPairs(spark, graft.Fixtures.erdosRenyi(80, 0.08, 7))
-    g.adjacency.count(); g.transposeAdjacency.count()
-    val verts = g.vertices.toDF("id")
-    val state = verts.select(col("id"), lit(1.0).as("a"))
-    val step = graft.operators.Hits.gatherScores(verts, g.transposeAdjacency, state, "a", "h")
-    step.collect() // AQE finalizes the physical plan on execution
-    val plan = step.queryExecution.executedPlan.toString
-    // The r3 defect: the h-step joined a flat arc table on `dst`, which
-    // re-shuffled all E arc rows every half-step (an Exchange partitioned
-    // on dst). The fixed gather goes through transposeAdjacency (already
-    // partitioned by ITS src), so no plan node may partition on a dst
-    // column — only the 16-byte (id, score) state and the partial-agg
-    // output are allowed to shuffle.
-    assert(!plan.contains("hashpartitioning(dst"),
-      s"arc-side dst shuffle crept back into the HITS gather:\n$plan")
-    assert(plan.contains("InMemoryTableScan"),
-      s"gather does not read the persisted adjacency:\n$plan")
+    val state = g.vertices.toDF("id").select(col("id"), lit(1.0).as("x"))
+    // The rank family's one gather, in both directions: forward (PageRank,
+    // Katz, eigenvector, the HITS a-step) and transpose (the h-step).
+    for ((dir, adj) <- Seq("forward" -> g.adjacency, "transpose" -> g.transposeAdjacency)) {
+      adj.count()
+      val step = RankLoop.gather(RankLoop.adjacency(adj), state, col("x") / col("deg"))
+      step.collect() // AQE finalizes the physical plan on execution
+      val exec = step.queryExecution.executedPlan
+      val plan = exec.toString
+      // The r3 defect: the h-step joined a flat arc table on `dst`, which
+      // re-shuffled all E arc rows every half-step (an Exchange partitioned
+      // on dst). The gather goes through the adjacency (already partitioned
+      // by ITS src), so only the 16-byte (id, score) state and the
+      // partial-agg output may shuffle: no Exchange partitions on a column
+      // of the adjacency scan.
+      assert(!plan.contains("hashpartitioning(dst"),
+        s"arc-side dst shuffle crept back into the $dir gather:\n$plan")
+      val scans = Plans.collect(exec) {
+        case s: InMemoryTableScanExec if s.output.exists(_.name == "dsts") => s
+      }
+      assert(scans.nonEmpty, s"$dir gather does not read the persisted adjacency:\n$plan")
+      val adjCols = scans.flatMap(_.output).map(_.exprId).toSet
+      val arcSide = Plans.collect(exec) { case e: ShuffleExchangeExec => e.outputPartitioning }.collect {
+        case p: Expression if p.references.exists(a => adjCols(a.exprId)) => p
+      }
+      assert(arcSide.isEmpty, s"$dir gather shuffles the adjacency:\n$plan")
+    }
     g.unpersist()
   }
 
