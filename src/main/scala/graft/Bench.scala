@@ -5,6 +5,8 @@ import graft.ingest.PageGen
 import graft.operators.{Bfs, PageRank}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Benchmark main. Prints a cumulative JSON line after EVERY completed
   * section — the last line is always the most complete artifact, and a
   * driver-side timeout (rc=124) still leaves the per-query numbers in the
@@ -88,7 +90,7 @@ object Bench {
         val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
         (if (f.length > 7) f(7) else 0L, f.sum)
       } finally src.close()
-    } catch { case _: Throwable => (0L, 0L) }
+    } catch { case NonFatal(_) => (0L, 0L) }
   }
 
   /** Percent of the wall interval the hypervisor stole between two
@@ -166,7 +168,7 @@ object Bench {
           line.get.contains("\"converged\":true")))
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] child spawn failed: ${e.getMessage}; in-process fallback")
         None
     }
@@ -514,7 +516,7 @@ object Bench {
           } else skipped += "webgraph hyperball (budget)"
         } finally s.stop()
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           parts("error") = s""""${jsonSafe(s"${e.getClass.getSimpleName}: ${e.getMessage}")}""""
           emitWeb("partial:webgraph-error")
       }
@@ -564,7 +566,7 @@ object Bench {
         val t0 = System.nanoTime()
         val err =
           try { fn(spark, sfDir).count(); None }
-          catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+          catch { case NonFatal(e) => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
         val sec = (System.nanoTime() - t0) / 1e9
         if (pass == 1) cold(name) = sec
         err match {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,12 +47,12 @@ object Coloring {
       maxRounds: Int = 64,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local twin (the [[Mis.run]] policy, same
-        * scaffolding): Jones–Plassmann rounds simulated round-for-round
-        * on driver arrays — deterministic function of (graph, salt), with
-        * `rounds`/`converged`/the maxRounds cutoff preserved exactly
-        * (pinned by `ColoringSpec`'s differential). Default 0 = always
-        * distributed.
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule; not
+        * taken when checkpointing is requested. The twin simulates the
+        * Jones–Plassmann rounds round for round on the symmetric view, so
+        * colors, `rounds`, `converged` and the maxRounds cutoff are those
+        * of the distributed rounds (pinned by `ColoringSpec`'s
+        * differential).
         */
       localFinishEdges: Long = 0L
   ): Result = {
@@ -60,51 +60,28 @@ object Coloring {
     val spark = graph.spark
     import spark.implicits._
 
-    if (localFinishEdges > 0 && checkpoint.isEmpty && graph.numEdges <= localFinishEdges) {
-      val g = new Mis.LocalSym(graph, salt)
+    if (checkpoint.isEmpty && LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      val sym = g.symmetric
+      val order = new Mis.LocalSym(g.ids, salt)
       val color = Array.fill(g.n)(-1L) // -1 = uncolored (null in the output)
       var remaining = g.n.toLong
       var rounds = 0
       while (remaining > 0 && rounds < maxRounds) {
         // ready = uncolored with every smaller-(key,id) neighbor colored;
         // color = mex over the DISTINCT colors of those neighbors.
-        val newColor = new Array[Long](g.n)
-        val isReady = new Array[Boolean](g.n)
-        var i = 0
-        while (i < g.n) {
-          if (color(i) < 0) {
-            var ready = true
-            val below = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var p = g.off(i)
-            while (ready && p < g.off(i + 1)) {
-              val u = g.nbr(p)
-              if (g.before(u, i)) {
-                if (color(u) < 0) ready = false else below += color(u)
-              }
-              p += 1
-            }
-            if (ready) {
-              val cs = below.distinct.sorted
-              var mex = 0L
-              cs.foreach(c => if (c == mex) mex += 1)
-              isReady(i) = true; newColor(i) = mex
-            }
-          }
-          i += 1
-        }
-        i = 0
-        while (i < g.n) {
-          if (isReady(i)) { color(i) = newColor(i); remaining -= 1 }
-          i += 1
+        val below = (0 until g.n).map(i =>
+          if (color(i) >= 0) None
+          else Some((sym.off(i) until sym.off(i + 1)).map(sym.nbr)
+            .filter(order.before(_, i)).map(color)).filterNot(_.contains(-1L)))
+        for (i <- 0 until g.n; cs <- below(i)) {
+          color(i) = cs.distinct.sorted.foldLeft(0L)((mex, c) => if (c == mex) mex + 1 else mex)
+          remaining -= 1
         }
         rounds += 1
       }
-      val colors = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          (0 until g.n).map(i =>
-            (g.ids(i), if (color(i) < 0) None else Some(color(i)))),
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
-        .toDF("id", "color")
+      val colors = LocalGraph.frame(spark,
+        g.ids.indices.map(i => (g.ids(i), Some(color(i)).filter(_ >= 0))), "id", "color")
       return Result(colors, rounds, converged = remaining == 0)
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext, SuperstepMetrics}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph, SuperstepMetrics}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,29 +37,23 @@ object ConnectedComponents {
       maxIter: Int = 200,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local finish ([[Scc.run]]'s policy): when
-        * > 0 and the graph's edge count fits the budget (~16 B/edge
-        * collected), labels come from one driver union-find pass instead
-        * of O(diameter) supersteps — each superstep costs whole Spark
-        * jobs of fixed overhead, which DOMINATES on small derived graphs
-        * (the near-dup PAIR graphs of `d_embed_neardup`/`d_neardup_rep`
-        * measured ~15 s of superstep overhead for a few hundred edges).
-        * Default 0 = always distributed; the gate's `g_cc` row and every
-        * CC spec run the distributed path. Call sites that derive a
-        * bounded small graph (LSH pair graphs) opt in; the budget still
-        * routes a larger-than-expected pair graph to the distributed
-        * path, so the bound is a hint, not a correctness assumption.
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule: labels
+        * come from one union-find pass ([[unionFindMin]]) instead of
+        * O(diameter) supersteps — the near-dup pair graphs of
+        * `d_embed_neardup`/`d_neardup_rep` measured ~15 s of superstep
+        * overhead for a few hundred edges. Union by min index is union by
+        * min id, so the labels are the distributed path's min-id labels.
         */
       localFinishEdges: Long = 0L
   ): Result = {
     val spark = graph.spark
     import spark.implicits._
 
-    if (localFinishEdges > 0 && graph.numEdges <= localFinishEdges) {
-      val edges = graph.edges.collect().map(e => (e.src, e.dst)).toSeq
-      val labels = unionFindMin(edges)
-      val comps = labels.toSeq.toDF("id", "comp")
-      return Result(comps, 0, labels.values.toSet.size.toLong, Nil)
+    if (LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      val root = unionFindMin(g)
+      val comps = g.ids.indices.map(i => (g.ids(i), g.ids(root(i)))).toDF("id", "comp")
+      return Result(comps, 0, root.indices.count(i => root(i) == i).toLong, Nil)
     }
 
     val sym = graph.symmetrize
@@ -104,27 +98,23 @@ object ConnectedComponents {
     Result(comps, iter, comps.select($"comp").distinct().count(), ctx.history.toSeq)
   }
 
-  /** Driver union-find with min-id labels — identical output contract to
-    * the distributed path (comp = min member id over the symmetrized
-    * edges). Union-by-min keeps roots canonical so no relabel pass is
-    * needed; path compression in `find` keeps it near-linear.
+  /** Driver union-find over `g`'s arcs: the min index of each vertex's
+    * component (= its min id, the distributed path's label). Union by
+    * min keeps roots canonical so no relabel pass is needed; path
+    * halving keeps `find` near-constant.
     */
-  private[operators] def unionFindMin(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
+  private[operators] def unionFindMin(g: LocalGraph): Array[Int] = {
+    val parent = Array.tabulate(g.n)(i => i)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.foreach { case (u, v) =>
-      parent.getOrElseUpdate(u, u)
-      parent.getOrElseUpdate(v, v)
-      val (ru, rv) = (find(u), find(v))
+    for (i <- g.src.indices) {
+      val (ru, rv) = (find(g.src(i)), find(g.dst(i)))
       if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
     }
-    parent.keys.map(v => v -> find(v)).toMap
+    Array.tabulate(g.n)(find)
   }
 
   final case class IncrementalResult(
@@ -340,19 +330,12 @@ object ConnectedComponents {
       .map(e => (cleanMap.getOrElse(e._1, e._1), cleanMap.getOrElse(e._2, e._2)))
       .filter(e => e._1 != e._2)
       .toSet
-    val rep = unionFindMin(repair.toSeq)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    newVerts.foreach { id =>
-      cleanMap.get(id) match {
-        case Some(c) => out += ((id, rep.getOrElse(c, c)))
-        case None => out += ((id, rep.getOrElse(id, id)))
-      }
-    }
-    val comps = spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(1, spark.sparkContext.defaultParallelism / 4)))
-      .toDF("id", "comp")
-    IncrementalResult(comps, repair.size.toLong, 0, dirtyComps.size.toLong)
+    val rg = LocalGraph(repair.iterator.map(_._1).toArray, repair.iterator.map(_._2).toArray)
+    val root = unionFindMin(rg)
+    def label(c: Long): Long = { val i = rg.index(c); if (i < 0) c else rg.ids(root(i)) }
+    val out = newVerts.toSeq.map(id => (id, label(cleanMap.getOrElse(id, id))))
+    IncrementalResult(LocalGraph.frame(spark, out, "id", "comp"),
+      repair.size.toLong, 0, dirtyComps.size.toLong)
   }
 
   /** Component sizes plus size-ranked renumbering, reproducing the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -70,17 +70,12 @@ object KTruss {
       maxRounds: Int = 1000,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local peel (the [[ConnectedComponents.run]]
-        * / [[TriangleCount.edgeSupport]] cap pattern): when > 0, no
-        * checkpointing is requested, and the arc count fits the budget
-        * (~16 B/arc collected), the whole synchronous peel runs on the
-        * driver over bitset adjacency — same rounds, same surviving
-        * (u, v, support) rows by definition (the peel is deterministic),
-        * pinned by `KTrussSpec`'s local-vs-distributed differential.
-        * One support pass over the dense derived gate face costs a Σ deg²
-        * wedge shuffle distributed vs an n²/64-word AND stream locally.
-        * Default 0 = always distributed; checkpointed callers keep the
-        * resumable superstep path unconditionally.
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule; not
+        * taken when checkpointing is requested (that path stays
+        * resumable). The peel is deterministic, so the twin's synchronous
+        * rounds over [[TriangleCount.supports]] give the same rounds and
+        * the same surviving (u, v, support) rows (pinned by `KTrussSpec`'s
+        * local-vs-distributed differential).
         */
       localFinishEdges: Long = 0L
   ): Result = {
@@ -89,27 +84,22 @@ object KTruss {
     import spark.implicits._
     val thresh = (k - 2).toLong
 
-    if (localFinishEdges > 0 && checkpoint.isEmpty && graph.numEdges <= localFinishEdges) {
-      var cur = TriangleCount.collectCanonical(graph)
-      var sup = TriangleCount.localSupports(cur)
+    if (checkpoint.isEmpty && LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      var (us, vs) = g.canonical
+      var sup = TriangleCount.supports(g.n, us, vs)
       var rounds = 0
-      var converged = false
-      var toDelete = sup.count(_ < thresh)
-      while (!converged && rounds < maxRounds) {
-        if (toDelete == 0) converged = true
-        else {
-          rounds += 1
-          cur = cur.indices.collect { case i if sup(i) >= thresh => cur(i) }.toArray
-          sup = TriangleCount.localSupports(cur)
-          toDelete = sup.count(_ < thresh)
-        }
+      while (sup.exists(_ < thresh) && rounds < maxRounds) {
+        rounds += 1
+        val keep = sup.indices.filter(sup(_) >= thresh).toArray
+        us = keep.map(us); vs = keep.map(vs)
+        sup = TriangleCount.supports(g.n, us, vs)
       }
-      val truss = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          cur.indices.map(i => (cur(i)._1, cur(i)._2, sup(i))),
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
-        .toDF("u", "v", "support")
-      return Result(truss, rounds, converged, Nil)
+      val truss = LocalGraph.frame(spark,
+        us.indices.map(i => (g.ids(us(i)), g.ids(vs(i)), sup(i))), "u", "v", "support")
+      // like the distributed loop, a fixpoint reached in the last allowed
+      // round is not checked, so it reads as not converged
+      return Result(truss, rounds, converged = rounds < maxRounds, Nil)
     }
 
     val ctx = new IterationContext("ktruss", checkpoint, verbose = verbose)

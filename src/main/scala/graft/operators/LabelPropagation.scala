@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext, SuperstepMetrics}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph, SuperstepMetrics}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (community detection) over the
   * symmetrized graph.
@@ -39,59 +38,47 @@ object LabelPropagation {
       maxIter: Int = 10,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local twin (the [[ConnectedComponents.run]]
-        * cap pattern): when > 0, no checkpointing is requested, and the
-        * arc count fits the budget (~16 B/arc collected), the synchronous
-        * vote rounds run on driver arrays — vote counts are exact
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule; not
+        * taken when checkpointing is requested. Vote counts are exact
         * integers with a total (count desc, label asc) order, so the
-        * result is bit-identical to the distributed rounds (pinned by
-        * `LocalTwinSpec`). Default 0 = always distributed.
+        * twin's rounds on the symmetric view are bit-identical to the
+        * distributed ones (pinned by `LocalTwinSpec`).
         */
       localFinishEdges: Long = 0L
   ): Result = {
     val spark = graph.spark
     import spark.implicits._
 
-    if (localFinishEdges > 0 && checkpoint.isEmpty && graph.numEdges <= localFinishEdges) {
-      val g = new Mis.LocalSym(graph, "")
+    if (checkpoint.isEmpty && LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      val sym = g.symmetric
       var label = g.ids.clone()
       val history = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
       var iter = 0
       var changed = 1L
-      val cnt = new java.util.HashMap[java.lang.Long, Long]()
       while (changed > 0 && iter < maxIter) {
         iter += 1
         changed = 0L
         val next = label.clone()
-        var i = 0
-        while (i < g.n) {
-          if (g.off(i + 1) > g.off(i)) {
-            cnt.clear()
-            var p = g.off(i)
-            while (p < g.off(i + 1)) { cnt.merge(label(g.nbr(p)), 1L, _ + _); p += 1 }
-            var bestLabel = Long.MaxValue
-            var bestCnt = -1L
-            val it = cnt.entrySet().iterator()
-            while (it.hasNext) {
-              val e = it.next()
-              if (e.getValue > bestCnt ||
-                  (e.getValue == bestCnt && e.getKey < bestLabel)) {
-                bestCnt = e.getValue; bestLabel = e.getKey
-              }
-            }
-            if (bestLabel != label(i)) { next(i) = bestLabel; changed += 1 }
+        for (i <- 0 until g.n if sym.degree(i) > 0) {
+          // sorted neighbour labels: the first longest run is the most
+          // frequent label, ties to the smallest
+          val votes = (sym.off(i) until sym.off(i + 1)).map(p => label(sym.nbr(p))).sorted
+          var best = votes(0); var bestCnt = 0; var p = 0
+          while (p < votes.length) {
+            var q = p
+            while (q < votes.length && votes(q) == votes(p)) q += 1
+            if (q - p > bestCnt) { best = votes(p); bestCnt = q - p }
+            p = q
           }
-          i += 1
+          if (best != label(i)) { next(i) = best; changed += 1 }
         }
         label = next
-        history += SuperstepMetrics(iter, changed.toDouble, g.nbr.length.toLong,
+        history += SuperstepMetrics(iter, changed.toDouble, sym.nbr.length.toLong,
           changed, 1.0, 0L)
       }
-      val labels = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          (0 until g.n).map(i => (g.ids(i), label(i))),
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
-        .toDF("id", "label")
+      val labels = LocalGraph.frame(spark, g.ids.indices.map(i => (g.ids(i), label(i))),
+        "id", "label")
       return Result(labels, iter, history.toSeq)
     }
 

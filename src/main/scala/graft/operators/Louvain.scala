@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext, SuperstepMetrics}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph, SuperstepMetrics}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -69,16 +69,12 @@ object Louvain {
       rounds: Int = 4,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local twin (the [[ConnectedComponents.run]]
-        * cap pattern): when > 0, no checkpointing is requested, and the
-        * arc count fits the budget (~16 B/arc collected), the synchronous
-        * move rounds run on driver arrays — every quantity in the move
-        * score is an exact integer (A·k − deg·vol fits i64 far beyond the
-        * cap) and ties break on the smallest community id, so the result
-        * is bit-identical to the distributed rounds by determinism, not
-        * by luck (pinned by `LouvainSpec`'s differential). Each
-        * distributed round is ~7 tiny shuffles of pure job latency on a
-        * derived gate graph. Default 0 = always distributed.
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule; not
+        * taken when checkpointing is requested. Every quantity in the move
+        * score is an exact integer (A·k − deg·vol fits i64 far beyond any
+        * cap) and ties break on the smallest community id, so the twin's
+        * rounds are bit-identical to the distributed ones by determinism
+        * (pinned by `LouvainSpec`'s differential).
         */
       localFinishEdges: Long = 0L
   ): Result = {
@@ -86,7 +82,7 @@ object Louvain {
     val spark = graph.spark
     import spark.implicits._
 
-    if (localFinishEdges > 0 && checkpoint.isEmpty && graph.numEdges <= localFinishEdges)
+    if (checkpoint.isEmpty && LocalGraph.fits(graph, localFinishEdges))
       return runLocal(graph, rounds)
 
     val sym = graph.symmetrize.edges.filter($"src" =!= $"dst").toDF()
@@ -131,97 +127,51 @@ object Louvain {
     * admissibility — over compact arrays instead of per-round shuffles.
     */
   private def runLocal(graph: Graph, rounds: Int): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-    val raw = graph.edges.collect()
-    // vertex universe: every endpoint (self-loop-only vertices included —
-    // they have simple degree 0 and never move, like the distributed path)
-    val idToIdx = new java.util.HashMap[Long, Integer]()
-    val idsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def idx(id: Long): Int = {
-      val e = idToIdx.get(id)
-      if (e != null) e.intValue()
-      else { val i = idsBuf.length; idToIdx.put(id, i); idsBuf += id; i }
-    }
-    raw.foreach { e => idx(e.src); idx(e.dst) }
-    val n = idsBuf.length
-    val ids = idsBuf.toArray
-    // symmetric simple arcs, deduplicated
-    val arcSet = scala.collection.mutable.HashSet.empty[(Int, Int)]
-    raw.foreach { e =>
-      if (e.src != e.dst) {
-        val u = idx(e.src); val v = idx(e.dst)
-        arcSet += ((u, v)); arcSet += ((v, u))
-      }
-    }
-    val arcsTotal = arcSet.size.toLong // A = 2m
-    val deg = new Array[Long](n)
-    arcSet.foreach { case (u, _) => deg(u) += 1 }
-    // CSR over symmetric arcs
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i).toInt; i += 1 }
-    val nbr = new Array[Int](arcsTotal.toInt)
-    val fill = java.util.Arrays.copyOf(off, n)
-    arcSet.foreach { case (u, v) => nbr(fill(u)) = v; fill(u) += 1 }
-
-    var comm = Array.tabulate(n)(i => i) // communities carry VERTEX ids; track as idx
+    // Self-loop-only vertices are in the universe with simple degree 0
+    // and never move, like the distributed path. Index order is id order,
+    // so communities are tracked by their min member's index.
+    val g = LocalGraph(graph)
+    val (n, sym) = (g.n, g.symmetric)
+    val arcsTotal = sym.nbr.length.toLong // A = 2m
+    val deg = Array.tabulate(n)(sym.degree(_).toLong)
+    var comm = Array.tabulate(n)(i => i)
     val history = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-    var round = 0
-    while (round < rounds) {
-      round += 1
+    for (round <- 1 to rounds) {
       // community stats under the CURRENT labels
       val vol = new Array[Long](n)
       val csize = new Array[Long](n)
-      val cmin = Array.fill(n)(Long.MaxValue)
-      i = 0
-      while (i < n) {
+      val cmin = Array.fill(n)(Int.MaxValue)
+      for (i <- 0 until n) {
         val c = comm(i)
-        vol(c) += deg(i); csize(c) += 1
-        if (ids(i) < cmin(c)) cmin(c) = ids(i)
-        i += 1
+        vol(c) += deg(i); csize(c) += 1; cmin(c) = math.min(cmin(c), i)
       }
       val next = comm.clone()
       var changed = 0L
-      val k = new java.util.HashMap[Integer, Long]()
-      i = 0
-      while (i < n) {
-        if (java.lang.Math.floorMod(ids(i) + round.toLong, 2L) == 0L) {
-          k.clear()
-          var p = off(i)
-          while (p < off(i + 1)) { val c = comm(nbr(p)); k.merge(c, 1L, _ + _); p += 1 }
-          val own = comm(i)
-          k.putIfAbsent(own, 0L)
-          var bestComm = -1
-          var bestCommId = Long.MaxValue
-          var bestScore = Long.MinValue
-          val it = k.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            val c = e.getKey.intValue()
-            // Grappolo singleton rule (staying put always admissible)
-            val admissible = c == own || !(csize(c) == 1L && cmin(c) > ids(i))
-            if (admissible) {
-              val score = arcsTotal * e.getValue -
-                deg(i) * (vol(c) - (if (c == own) deg(i) else 0L))
-              val cId = ids(c)
-              if (score > bestScore || (score == bestScore && cId < bestCommId)) {
-                bestScore = score; bestComm = c; bestCommId = cId
-              }
-            }
+      for (i <- 0 until n if java.lang.Math.floorMod(g.ids(i) + round.toLong, 2L) == 0L) {
+        val own = comm(i)
+        // candidates = neighbour communities ∪ own, sorted: each run of c
+        // is k(i, c) arcs (own's run carries one extra entry)
+        val cand = ((sym.off(i) until sym.off(i + 1)).map(p => comm(sym.nbr(p))) :+ own).sorted
+        var best = own; var bestScore = Long.MinValue; var p = 0
+        while (p < cand.length) {
+          val c = cand(p)
+          var q = p
+          while (q < cand.length && cand(q) == c) q += 1
+          // Grappolo singleton rule (staying put always admissible)
+          if (c == own || !(csize(c) == 1L && cmin(c) > i)) {
+            val score = if (c == own) arcsTotal * (q - p - 1) - deg(i) * (vol(c) - deg(i))
+              else arcsTotal * (q - p) - deg(i) * vol(c)
+            if (score > bestScore) { bestScore = score; best = c }
           }
-          if (bestComm >= 0 && bestComm != own) { next(i) = bestComm; changed += 1 }
+          p = q
         }
-        i += 1
+        if (best != own) { next(i) = best; changed += 1 }
       }
       comm = next
       history += SuperstepMetrics(round, changed.toDouble, arcsTotal, changed, 1.0, 0L)
     }
-    val labels = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (0 until n).map(i => (ids(i), ids(comm(i)))),
-        math.max(1, spark.sparkContext.defaultParallelism / 4)))
-      .toDF("id", "comm")
+    val labels = LocalGraph.frame(graph.spark,
+      g.ids.indices.map(i => (g.ids(i), g.ids(comm(i)))), "id", "comm")
     Result(labels, rounds, history.toSeq)
   }
 

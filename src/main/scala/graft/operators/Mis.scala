@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{CheckpointConfig, Graph, IterationContext}
+import graft.core.{CheckpointConfig, Graph, IterationContext, LocalGraph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -59,44 +59,14 @@ object Mis {
     (v << 4) | ((d(7) & 0xf0L) >>> 4)
   }
 
-  /** Compact local view of the symmetric simple graph + permutation keys
-    * — the shared scaffolding of the [[Mis]]/[[Coloring]] local twins.
+  /** The (key, id) permutation order of a [[LocalGraph]]'s vertices —
+    * what the [[Mis]] and [[Coloring]] twins add to its symmetric view.
     */
-  private[operators] final class LocalSym(graph: Graph, salt: String) {
-    private val raw = graph.edges.collect()
-    private val idToIdx = new java.util.HashMap[Long, Integer]()
-    private val idsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    private def idx(id: Long): Int = {
-      val e = idToIdx.get(id)
-      if (e != null) e.intValue()
-      else { val i = idsBuf.length; idToIdx.put(id, i); idsBuf += id; i }
-    }
-    raw.foreach { e => idx(e.src); idx(e.dst) }
-    val ids: Array[Long] = idsBuf.toArray
-    val n: Int = ids.length
-    lazy val key: Array[Long] = ids.map(keyOfLocal(_, salt)) // unused by the LP twin
-    /** (key, id)-precedence: does a come strictly before b? */
+  private[operators] final class LocalSym(ids: Array[Long], salt: String) {
+    private val key = ids.map(keyOfLocal(_, salt))
+    /** Does index a come strictly before index b? */
     def before(a: Int, b: Int): Boolean =
       key(a) < key(b) || (key(a) == key(b) && ids(a) < ids(b))
-    // CSR over distinct symmetric non-loop arcs
-    val (off, nbr) = {
-      val arcSet = scala.collection.mutable.HashSet.empty[(Int, Int)]
-      raw.foreach { e =>
-        if (e.src != e.dst) {
-          val u = idx(e.src); val v = idx(e.dst)
-          arcSet += ((u, v)); arcSet += ((v, u))
-        }
-      }
-      val deg = new Array[Int](n)
-      arcSet.foreach { case (u, _) => deg(u) += 1 }
-      val o = new Array[Int](n + 1)
-      var i = 0
-      while (i < n) { o(i + 1) = o(i) + deg(i); i += 1 }
-      val nb = new Array[Int](arcSet.size)
-      val fill = java.util.Arrays.copyOf(o, n)
-      arcSet.foreach { case (u, v) => nb(fill(u)) = v; fill(u) += 1 }
-      (o, nb)
-    }
   }
 
   def run(
@@ -105,16 +75,12 @@ object Mis {
       maxRounds: Int = 64,
       checkpoint: Option[CheckpointConfig] = None,
       verbose: Boolean = false,
-      /** Opt-in bounded driver-local twin (the [[ConnectedComponents.run]]
-        * cap pattern): when > 0, no checkpointing is requested, and the
-        * arc count fits the budget (~16 B/arc collected), the Luby
-        * local-minima rounds are simulated round-for-round on driver
-        * arrays — the output is already a deterministic function of
-        * (graph, salt) by the permutation-greedy equivalence, and the
-        * simulation preserves `rounds`/`converged`/the maxRounds cutoff
-        * exactly (pinned by `MisSpec`'s differential). Each distributed
-        * round is ~5 tiny shuffles of pure job latency on a derived gate
-        * graph. Default 0 = always distributed.
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule; not
+        * taken when checkpointing is requested. The twin simulates the
+        * Luby rounds round for round on the symmetric view, so the
+        * permutation-greedy fixpoint, `rounds`, `converged` and the
+        * maxRounds cutoff are those of the distributed rounds (pinned by
+        * `MisSpec`'s differential).
         */
       localFinishEdges: Long = 0L
   ): Result = {
@@ -122,46 +88,28 @@ object Mis {
     val spark = graph.spark
     import spark.implicits._
 
-    if (localFinishEdges > 0 && checkpoint.isEmpty && graph.numEdges <= localFinishEdges) {
-      val g = new LocalSym(graph, salt)
+    if (checkpoint.isEmpty && LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      val sym = g.symmetric
+      val order = new LocalSym(g.ids, salt)
       val live = Array.fill(g.n)(true)
       val inMis = new Array[Boolean](g.n)
       var remaining = g.n.toLong
       var rounds = 0
       while (remaining > 0 && rounds < maxRounds) {
         // winners = live local minima of the (key, id) permutation
-        val winner = new Array[Boolean](g.n)
-        var i = 0
-        while (i < g.n) {
-          if (live(i)) {
-            var isMin = true
-            var p = g.off(i)
-            while (isMin && p < g.off(i + 1)) {
-              val u = g.nbr(p)
-              if (live(u) && g.before(u, i)) isMin = false
-              p += 1
-            }
-            winner(i) = isMin
-          }
-          i += 1
-        }
-        i = 0
-        while (i < g.n) {
-          if (live(i) && winner(i)) {
-            inMis(i) = true; live(i) = false
-            var p = g.off(i)
-            while (p < g.off(i + 1)) { live(g.nbr(p)) = false; p += 1 }
-          }
-          i += 1
+        val winner = Array.tabulate(g.n)(i => live(i) &&
+          (sym.off(i) until sym.off(i + 1)).forall { p =>
+            val u = sym.nbr(p); !live(u) || !order.before(u, i) })
+        for (i <- 0 until g.n if winner(i)) {
+          inMis(i) = true; live(i) = false
+          for (p <- sym.off(i) until sym.off(i + 1)) live(sym.nbr(p)) = false
         }
         rounds += 1
         remaining = live.count(identity).toLong
       }
-      val mis = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          (0 until g.n).map(i => (g.ids(i), inMis(i))),
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
-        .toDF("id", "in_mis")
+      val mis = LocalGraph.frame(spark, g.ids.indices.map(i => (g.ids(i), inMis(i))),
+        "id", "in_mis")
       return Result(mis, rounds, converged = remaining == 0)
     }
 

@@ -1,11 +1,9 @@
 package graft.operators
 
-import graft.core.{Graph, Lineage}
+import graft.core.{Graph, LocalGraph, Lineage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-
-import scala.collection.mutable
 
 /** Strongly connected components.
   *
@@ -46,55 +44,62 @@ object Scc {
   def tarjanMap(edges: Seq[(Long, Long)]): Map[Long, Long] =
     tarjanMapStats(edges)._1
 
-  /** [[tarjanMap]] plus visit statistics, pinning the reference's
-    * whole-graph early exit (`tarjan.rs:60-76`): once every vertex is
-    * discovered and the current vertex links back to the root of the
-    * current DFS tree, every still-unassigned vertex (the Tarjan stack,
-    * which includes the residual visit path — the reference flushes it
-    * via `visit.stack()`, `seq.rs:170-183` / `tarjan.rs:113-117`) is one
-    * SCC: stack nodes all reach the current vertex (Tarjan invariant),
-    * it reaches the tree root, and the root reaches every discovered
-    * unemitted node. Remaining successor enumerations are skipped — on a
-    * single-SCC graph with heavy back-edge fan-in the visit ends at the
-    * FIRST closing revisit instead of examining every remaining arc.
-    */
+  /** [[tarjanMap]] plus visit statistics (see [[tarjan]]). */
   private[operators] def tarjanMapStats(edges: Seq[(Long, Long)]): (Map[Long, Long], TarjanStats) = {
-    val verts = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-    val totalVerts = verts.length
-    val adj = edges.distinct.groupBy(_._1).map { case (s, l) => s -> l.map(_._2).sorted }
-    val index = mutable.Map[Long, Int]()
-    val lowlink = mutable.Map[Long, Int]()
-    val onStack = mutable.Set[Long]()
-    val stack = mutable.ArrayBuffer[Long]()
-    val comp = mutable.Map[Long, Long]()
-    var nextIndex = 0
-    var nextComp = 0L
+    val g = LocalGraph(edges.map(_._1).toArray, edges.map(_._2).toArray)
+    val (comp, stats) = tarjan(g)
+    (g.ids.indices.map(i => g.ids(i) -> comp(i).toLong).toMap, stats)
+  }
+
+  /** Iterative Tarjan over `g`'s forward view: the component of each
+    * index, numbered from 0 in pop order. Roots are taken in ascending
+    * id order and successors in ascending distinct order. Pins the
+    * reference's whole-graph early exit (`tarjan.rs:60-76`): once every
+    * vertex is discovered and the current vertex links back to the root
+    * of the current DFS tree, every still-unassigned vertex (the Tarjan
+    * stack, which includes the residual visit path — the reference
+    * flushes it via `visit.stack()`, `seq.rs:170-183` /
+    * `tarjan.rs:113-117`) is one SCC: stack nodes all reach the current
+    * vertex (Tarjan invariant), it reaches the tree root, and the root
+    * reaches every discovered unemitted node. Remaining successor
+    * enumerations are skipped — on a single-SCC graph with heavy
+    * back-edge fan-in the visit ends at the FIRST closing revisit instead
+    * of examining every remaining arc.
+    */
+  private[operators] def tarjan(g: LocalGraph): (Array[Int], TarjanStats) = {
+    val (n, fwd) = (g.n, g.forward)
+    val index = Array.fill(n)(-1)
+    val lowlink = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    val comp = new Array[Int](n)
+    // explicit work stack: vertex and the position of its next successor
+    val work = new Array[Int](n)
+    val next = new Array[Int](n)
+    var (sp, wp, nextIndex, nextComp) = (0, 0, 0, 0)
     var revisits = 0L
     var earlyExit = false
-
-    for (root <- verts if !earlyExit && !index.contains(root)) {
-      // Explicit work stack: (vertex, successor iterator position)
-      val work = mutable.ArrayBuffer[(Long, Iterator[Long])]()
-      def push(v: Long): Unit = {
-        index(v) = nextIndex; lowlink(v) = nextIndex; nextIndex += 1
-        stack += v; onStack += v
-        work += ((v, adj.getOrElse(v, Nil).iterator))
-      }
+    def push(v: Int): Unit = {
+      index(v) = nextIndex; lowlink(v) = nextIndex; nextIndex += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      work(wp) = v; next(wp) = fwd.off(v); wp += 1
+    }
+    for (root <- 0 until n if !earlyExit && index(root) < 0) {
       push(root)
       val rootIdx = index(root)
-      while (work.nonEmpty && !earlyExit) {
-        val (v, it) = work.last
+      while (wp > 0 && !earlyExit) {
+        val (v, top) = (work(wp - 1), wp - 1)
         var descended = false
-        while (!descended && !earlyExit && it.hasNext) {
-          val w = it.next()
-          if (!index.contains(w)) { push(w); descended = true }
+        while (!descended && !earlyExit && next(top) < fwd.off(v + 1)) {
+          val w = fwd.nbr(next(top)); next(top) += 1
+          if (index(w) < 0) { push(w); descended = true }
           else {
             revisits += 1
             if (onStack(w)) {
               lowlink(v) = math.min(lowlink(v), index(w))
-              if (lowlink(v) == rootIdx && nextIndex == totalVerts) {
-                // Whole-graph early exit + residual flush (see scaladoc).
-                stack.foreach(comp(_) = nextComp)
+              if (lowlink(v) == rootIdx && nextIndex == n) {
+                // whole-graph early exit + residual flush (see above)
+                for (k <- 0 until sp) comp(stack(k)) = nextComp
                 nextComp += 1
                 earlyExit = true
               }
@@ -102,24 +107,17 @@ object Scc {
           }
         }
         if (!descended && !earlyExit) {
-          work.remove(work.length - 1)
-          if (work.nonEmpty) {
-            val p = work.last._1
-            lowlink(p) = math.min(lowlink(p), lowlink(v))
-          }
+          wp -= 1
+          if (wp > 0) lowlink(work(wp - 1)) = math.min(lowlink(work(wp - 1)), lowlink(v))
           if (lowlink(v) == index(v)) {
-            var w = -1L
-            while (w != v) {
-              w = stack.remove(stack.length - 1)
-              onStack -= w
-              comp(w) = nextComp
-            }
+            var w = -1
+            while (w != v) { sp -= 1; w = stack(sp); onStack(w) = false; comp(w) = nextComp }
             nextComp += 1
           }
         }
       }
     }
-    (comp.toMap, TarjanStats(revisits, earlyExit))
+    (comp, TarjanStats(revisits, earlyExit))
   }
 
   /** Driver-exact Tarjan as a DataFrame (id, comp); `maxNodes` guards
@@ -130,13 +128,13 @@ object Scc {
     import spark.implicits._
     require(graph.numVertices <= maxNodes,
       s"tarjanLocal is the driver-exact path (${graph.numVertices} > $maxNodes nodes); use Scc.run")
-    val edges = graph.edges.collect().map(e => (e.src, e.dst)).toSeq
-    tarjanMap(edges).toSeq.toDF("id", "comp")
+    val g = LocalGraph(graph)
+    val comp = tarjan(g)._1
+    g.ids.indices.map(i => (g.ids(i), comp(i).toLong)).toDF("id", "comp")
   }
 
   /** Number of SCCs (driver-exact). */
-  def countLocal(graph: Graph): Long =
-    tarjanMap(graph.edges.collect().map(e => (e.src, e.dst)).toSeq).values.toSet.size
+  def countLocal(graph: Graph): Long = tarjan(LocalGraph(graph))._1.distinct.length.toLong
 
   /** Distributed FB-Trim. Returns (id, comp) with comp = min member id.
     *
@@ -145,19 +143,21 @@ object Scc {
     * giant one — cnr-2000: 100,977 SCCs, `tests/test_sccs.rs:221`), and
     * each distributed round costs supersteps proportional to the
     * partitions' BFS depth. Once the ACTIVE residual fits
-    * `localFinishEdges` (collected bytes are bounded: ~48 B/edge), the
-    * tail is finished in one driver-side Tarjan pass per partition —
-    * the same bounded-driver-residual policy as [[SumSweep.compute]]'s
-    * `maxComponents` condensation guard. Rounds stay fully distributed
-    * until the budget is met, so a 10⁹-node crawl still carves its giant
-    * SCC out with distributed F/B sweeps; `localFinishEdges = 0`
-    * disables the hybrid entirely (used by specs to pin the distributed
-    * path).
+    * `localFinishEdges` (the [[graft.core.LocalGraph]] cap, here on the
+    * residual's arcs), the tail is finished in one driver-side Tarjan
+    * pass over the collected residual: its arcs never leave their
+    * partition, so no SCC crosses partitions and one pass labels every
+    * part — the same bounded-driver-residual policy as
+    * [[SumSweep.compute]]'s `maxComponents` condensation guard. Rounds
+    * stay fully distributed until the budget is met, so a 10⁹-node crawl
+    * still carves its giant SCC out with distributed F/B sweeps;
+    * `localFinishEdges = 0` disables the hybrid entirely (used by specs
+    * to pin the distributed path).
     */
   def run(
       graph: Graph,
       maxRounds: Int = 1000,
-      localFinishEdges: Long = 2000000L
+      localFinishEdges: Long = LocalGraph.QueryCap
   ): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
@@ -197,24 +197,17 @@ object Scc {
       val eCount = e.count()
       eCountEstimate = eCount
 
-      // --- hybrid local finish (see scaladoc): the residual subgraph
-      // fits the driver budget — one Tarjan pass per partition replaces
-      // the remaining O(tail) distributed rounds. Vertices absent from
-      // `e` (no intra-part edge) are singleton SCCs.
+      // --- hybrid local finish (see scaladoc). Vertices absent from `e`
+      // (no intra-part edge) are singleton SCCs.
       if (eCount <= localFinishEdges && activeCount <= 4 * math.max(localFinishEdges, 1)) {
-        val byPart = e.select($"part", $"src", $"dst").as[(Long, Long, Long)]
-          .collect().groupBy(_._1)
-        val localComp = mutable.Map[Long, Long]()
-        byPart.foreach { case (_, rows) =>
-          tarjanMap(rows.toSeq.map(r => (r._2, r._3)))
-            .groupBy(_._2)
-            .foreach { case (_, members) =>
-              val label = members.keys.min
-              members.keys.foreach(v => localComp(v) = label)
-            }
-        }
+        val arcs = e.select($"src", $"dst").as[(Long, Long)].collect()
+        val g = LocalGraph(arcs.map(_._1), arcs.map(_._2))
+        val comp = tarjan(g)._1
+        val minOf = Array.fill(g.n)(Int.MaxValue) // pop number -> min member index
+        for (i <- 0 until g.n) minOf(comp(i)) = math.min(minOf(comp(i)), i)
         val assigned = active.select($"id").as[Long].collect().map { id =>
-          (id, localComp.getOrElse(id, id))
+          val i = g.index(id)
+          (id, if (i < 0) id else g.ids(minOf(comp(i))))
         }
         val newResult = result
           .union(assigned.toSeq.toDF("id", "comp"))

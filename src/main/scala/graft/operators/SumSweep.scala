@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Graph, Lineage}
+import graft.core.{Graph, LocalGraph, Lineage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -109,12 +109,12 @@ object SumSweep {
   private val LocalWorkBudget = 2e10
 
   private def localFitsBudget(graph: Graph, localFinishEdges: Long): Boolean =
-    localFinishEdges > 0 && graph.numEdges <= localFinishEdges &&
+    LocalGraph.fits(graph, localFinishEdges) &&
       graph.numVertices.toDouble * graph.numEdges.toDouble <= LocalWorkBudget
 
   /** The bounded local-exact computer behind `localFinishEdges`:
     * eccentricities by one BFS per source, the sources fanned out as a
-    * SINGLE Spark job over a broadcast CSR (each task runs whole
+    * SINGLE Spark job over a broadcast forward CSR (each task runs whole
     * sequential visits — per-visit-LEVEL job latency, the small-graph
     * wall of the sweep computer, disappears). The radial set replays the
     * distributed derivation: backward reach of the largest component's
@@ -129,135 +129,51 @@ object SumSweep {
       undirected: Boolean): Result = {
     val spark = graph.spark
     import spark.implicits._
-    val arcs = graph.edges.collect()
-    val ids: Array[Long] = {
-      val s = new java.util.TreeSet[java.lang.Long]()
-      arcs.foreach { e => s.add(e.src); s.add(e.dst) }
-      val a = new Array[Long](s.size)
-      val it = s.iterator(); var i = 0
-      while (it.hasNext) { a(i) = it.next(); i += 1 }
-      a
-    }
-    require(ids.nonEmpty, "ExactSumSweep on an empty graph (reference panics too)")
-    val nV = ids.length
-    val idx = new java.util.HashMap[java.lang.Long, Integer](nV * 2)
-    var i0 = 0
-    while (i0 < nV) { idx.put(ids(i0), i0); i0 += 1 }
-
-    def csr(rev: Boolean): (Array[Int], Array[Int]) = {
-      val deg = new Array[Int](nV)
-      arcs.foreach(e => deg(idx.get(if (rev) e.dst else e.src)) += 1)
-      val offs = new Array[Int](nV + 1)
-      var i = 0
-      while (i < nV) { offs(i + 1) = offs(i) + deg(i); i += 1 }
-      val tgt = new Array[Int](arcs.length)
-      val cur = offs.clone()
-      arcs.foreach { e =>
-        val s = idx.get(if (rev) e.dst else e.src)
-        tgt(cur(s)) = idx.get(if (rev) e.src else e.dst)
-        cur(s) += 1
-      }
-      (offs, tgt)
-    }
-    val (fOffs, fTgt) = csr(rev = false)
-
-    def bfsInto(offs: Array[Int], tgt: Array[Int], src: Int,
-                dist: Array[Int], queue: Array[Int]): Int = {
-      java.util.Arrays.fill(dist, -1)
-      var head = 0; var tail = 0
-      dist(src) = 0; queue(tail) = src; tail += 1
-      var ecc = 0
-      while (head < tail) {
-        val u = queue(head); head += 1
-        val du = dist(u)
-        if (du > ecc) ecc = du
-        var p = offs(u)
-        val end = offs(u + 1)
-        while (p < end) {
-          val v = tgt(p)
-          if (dist(v) < 0) { dist(v) = du + 1; queue(tail) = v; tail += 1 }
-          p += 1
-        }
-      }
-      ecc
-    }
-
-    val bcIds = spark.sparkContext.broadcast(ids)
-    val bcOffs = spark.sparkContext.broadcast(fOffs)
-    val bcTgt = spark.sparkContext.broadcast(fTgt)
-    val parts = math.max(1, math.min(nV.toLong,
+    val g = LocalGraph(graph)
+    require(g.n > 0, "ExactSumSweep on an empty graph (reference panics too)")
+    val (bcIds, bcFwd) = (spark.sparkContext.broadcast(g.ids), spark.sparkContext.broadcast(g.forward))
+    val parts = math.max(1, math.min(g.n.toLong,
       spark.sparkContext.defaultParallelism.toLong * 4L)).toInt
-    val eccPairs: Array[(Long, Int)] = spark.range(0, nV.toLong, 1, parts)
+    val eccPairs: Array[(Long, Int)] = spark.range(0, g.n.toLong, 1, parts)
       .mapPartitions { it =>
-        val offs = bcOffs.value; val tgt = bcTgt.value; val vids = bcIds.value
-        val nn = offs.length - 1
-        val dist = new Array[Int](nn)
-        val queue = new Array[Int](nn)
-        val bfsLocal = (s: Int) => {
-          java.util.Arrays.fill(dist, -1)
-          var head = 0; var tail = 0
-          dist(s) = 0; queue(tail) = s; tail += 1
-          var ecc = 0
-          while (head < tail) {
-            val u = queue(head); head += 1
-            val du = dist(u)
-            if (du > ecc) ecc = du
-            var p = offs(u)
-            val end = offs(u + 1)
-            while (p < end) {
-              val v = tgt(p)
-              if (dist(v) < 0) { dist(v) = du + 1; queue(tail) = v; tail += 1 }
-              p += 1
-            }
-          }
-          ecc
-        }
-        it.map(srcL => (vids(srcL.toInt), bfsLocal(srcL.toInt)))
+        val (fwd, vids) = (bcFwd.value, bcIds.value)
+        val (dist, queue) = (new Array[Int](vids.length), new Array[Int](vids.length))
+        it.map(s => (vids(s.toInt), LocalGraph.bfs(fwd, s.toInt, dist, queue)))
       }.collect()
     val eccDf = eccPairs.toSeq.toDF("id", "ecc").localCheckpoint(true)
 
-    // Component labels normalized to MIN member (the normalizedComponents
-    // contract) — provided, or a driver twin matching each computer's
-    // distributed default (Tarjan for the directed path, union-find for
-    // the symmetric one; both already the cap-guarded pattern elsewhere).
-    val rawLabels: Map[Long, Long] = components match {
+    // Largest component by (size desc, min member asc), over the provided
+    // labels or a driver twin of each computer's distributed default
+    // (Tarjan for the directed path, union-find for the symmetric one).
+    val labelled: Seq[(Long, Long)] = components match {
       case Some(df) =>
         df.select(col("id").cast("long"), col("comp").cast("long")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap.toSeq
       case None =>
-        val pairs = arcs.map(e => (e.src, e.dst)).toSeq
-        if (undirected) ConnectedComponents.unionFindMin(pairs)
-        else Scc.tarjanMap(pairs)
+        val comp = if (undirected) ConnectedComponents.unionFindMin(g) else Scc.tarjan(g)._1
+        g.ids.indices.map(i => (g.ids(i), comp(i).toLong))
     }
-    val minOf = rawLabels.groupBy(_._2).map { case (c, g) => c -> g.keys.min }
-    val labels = rawLabels.map { case (id, c) => id -> minOf(c) }
-    val largest = labels.groupBy(_._2)
-      .map { case (c, g) => (c, g.size) }.toSeq
-      .minBy { case (c, sz) => (-sz.toLong, c) }._1
+    val largest = labelled.groupBy(_._2).values.map(m => (-m.size, m.map(_._1).min)).min._2
 
     val radialIds: Array[Long] = radialVertices match {
       case Some(df) => df.select(col("id").cast("long")).collect().map(_.getLong(0))
       case None =>
-        val (bOffs, bTgt) = csr(rev = true)
-        val dist = new Array[Int](nV)
-        val queue = new Array[Int](nV)
-        bfsInto(bOffs, bTgt, idx.get(largest), dist, queue)
-        ids.indices.collect { case i if dist(i) >= 0 => ids(i) }.toArray
+        val dist = new Array[Int](g.n)
+        LocalGraph.bfs(g.transpose, g.index(largest), dist, new Array[Int](g.n))
+        g.ids.indices.collect { case i if dist(i) >= 0 => g.ids(i) }.toArray
     }
     val radialDf = radialIds.toSeq.toDF("id").localCheckpoint(true)
 
     // Canonical extremal picks (the Eccentricity.fromEcc tie-breaks:
     // value first, then smallest id; the sweep computer's own witnesses
     // are first-certified, documented as non-canonical).
-    val (diamV, diam) = eccPairs.minBy { case (id, e) => (-e, id) } match {
-      case (id, e) => (id, e)
-    }
+    val (diamV, diam) = eccPairs.minBy { case (id, e) => (-e, id) }
     val radialSet = radialIds.toSet
     val radialEcc = eccPairs.filter(p => radialSet(p._1))
     val (radV, rad) =
       if (radialEcc.isEmpty) (-1L, Int.MaxValue)
       else radialEcc.minBy { case (id, e) => (e, id) }
-    Result(eccDf, rad, radV, diam, diamV, iterations = nV, radial = radialDf)
+    Result(eccDf, rad, radV, diam, diamV, iterations = g.n, radial = radialDf)
   }
 
   def compute(
@@ -298,17 +214,14 @@ object SumSweep {
         */
       maxComponents: Long = 1000000,
       verbose: Boolean = false,
-      /** Opt-in bounded local-exact finish (the [[Scc.run]] /
-        * [[ConnectedComponents.run]] cap pattern): when > 0 and the arc
-        * count fits the budget (~16 B/arc collected), eccentricities come
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule, also
+        * bounded by n·m BFS work (`LocalWorkBudget`): eccentricities come
         * from per-source BFS over a BROADCAST CSR — one Spark job whose
         * tasks each run whole sequential visits — instead of the adaptive
-        * sweep loop, whose per-BFS-level job latency dominates wall time
-        * on small graphs (the r5 verdict's cnr-2000 diameter analysis).
-        * Exact output is identical by definition: eccentricities are
-        * unique, and the radial set reproduces the same backward-reach-of-
-        * largest-SCC derivation. Default 0 = always the distributed
-        * computer (every pre-existing caller and spec).
+        * sweep loop, whose per-BFS-level job latency dominates on small
+        * graphs. Eccentricities are unique and the radial set reproduces
+        * the same backward-reach-of-largest-SCC derivation, so the output
+        * is identical by definition.
         */
       localFinishEdges: Long = 0L): Result = {
     val spark = graph.spark

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.core.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Graph, LocalGraph}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -88,27 +88,21 @@ object TriangleCount {
     */
   def edgeSupport(
       graph: Graph,
-      /** Opt-in bounded driver-local exact path (the
-        * [[ConnectedComponents.run]] / [[SumSweep.compute]] cap pattern):
-        * when > 0 and the arc count fits the budget (~16 B/arc
-        * collected), supports come from one driver bitset/merge
-        * intersection pass ([[localSupports]]) instead of the wedge
-        * equi-join — whose Σ deg² wedge stream is the whole cost on the
-        * dense derived gate faces. Identical counts by definition;
-        * default 0 = always distributed (every pre-existing caller and
-        * spec unchanged).
+      /** Driver-local twin cap, the [[graft.core.LocalGraph]] rule.
+        * The twin counts |N(u) ∩ N(v)| per canonical pair of the
+        * symmetric view ([[supports]]) — the definition the wedge join
+        * computes, so the rows are identical; it skips the Σ deg² wedge
+        * stream that is the whole cost on the dense derived gate faces.
         */
       localFinishEdges: Long = 0L): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    if (localFinishEdges > 0 && graph.numEdges <= localFinishEdges) {
-      val canon = collectCanonical(graph)
-      val sup = localSupports(canon)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          canon.indices.map(i => (canon(i)._1, canon(i)._2, sup(i))),
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
-        .toDF("u", "v", "support")
+    if (LocalGraph.fits(graph, localFinishEdges)) {
+      val g = LocalGraph(graph)
+      val (us, vs) = g.canonical
+      val sup = supports(g.n, us, vs)
+      return LocalGraph.frame(spark,
+        us.indices.map(i => (g.ids(us(i)), g.ids(vs(i)), sup(i))), "u", "v", "support")
     }
     val und = graph.edges
       .filter($"src" =!= $"dst")
@@ -118,100 +112,50 @@ object TriangleCount {
     supportOfCanonical(und)
   }
 
-  /** Canonical (u < v, loop-free, distinct) undirected edges collected to
-    * the driver — the local-exact twin's input. ~16 B/edge, same budget
-    * arithmetic as [[ConnectedComponents.run]]'s `localFinishEdges`.
-    */
-  private[operators] def collectCanonical(graph: Graph): Array[(Long, Long)] = {
-    val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    graph.edges.collect().foreach { e =>
-      if (e.src != e.dst) {
-        val p = (math.min(e.src, e.dst), math.max(e.src, e.dst))
-        if (seen.add(p)) buf += p
-      }
-    }
-    buf.toArray
+  /** [[supports]] over canonical id pairs, in their order. */
+  private[operators] def localSupports(canon: Array[(Long, Long)]): Array[Long] = {
+    val g = LocalGraph(canon.map(_._1), canon.map(_._2))
+    supports(g.n, g.src, g.dst)
   }
 
-  /** Driver-local exact per-edge triangle supports over canonical edges —
-    * the cap-guarded twin of [[supportOfCanonical]]'s wedge-join plan
-    * (identical counts by definition: support(u,v) = |N(u) ∩ N(v)| over
-    * the undirected simple graph). Dense small graphs (the derived gate
-    * faces are near-cliques) use N-bit adjacency bitsets —
-    * popcount(row(u) & row(v)) per edge — which replaces the wedge
-    * blow-up (Σ deg² rows through a shuffle) with n²/64-word AND streams;
-    * larger sparse graphs under the cap use sorted-adjacency merge
-    * intersection (Σ_e deg(u)+deg(v) word reads).
+  /** Driver-local exact triangle support of each canonical pair
+    * (us(i) < vs(i), distinct, over indices `0 until n`): the cap-guarded
+    * twin of [[supportOfCanonical]]'s wedge-join plan, identical counts
+    * by definition (support(u,v) = |N(u) ∩ N(v)|). Dense small graphs
+    * (the derived gate faces are near-cliques) use n-bit adjacency rows
+    * — popcount(row(u) & row(v)) per pair, n²/64-word AND streams in
+    * place of the Σ deg² wedge shuffle; larger sparse graphs merge the
+    * sorted neighbour lists (Σ deg(u)+deg(v) reads per pair).
     */
-  private[operators] def localSupports(canon: Array[(Long, Long)]): Array[Long] = {
-    // compact ids
-    val idToIdx = new java.util.HashMap[Long, Integer]()
-    var n = 0
-    canon.foreach { case (u, v) =>
-      if (!idToIdx.containsKey(u)) { idToIdx.put(u, n); n += 1 }
-      if (!idToIdx.containsKey(v)) { idToIdx.put(v, n); n += 1 }
-    }
-    val us = new Array[Int](canon.length)
-    val vs = new Array[Int](canon.length)
-    var i = 0
-    while (i < canon.length) {
-      us(i) = idToIdx.get(canon(i)._1); vs(i) = idToIdx.get(canon(i)._2); i += 1
-    }
-    val sup = new Array[Long](canon.length)
+  private[operators] def supports(n: Int, us: Array[Int], vs: Array[Int]): Array[Long] =
     if (n.toLong * ((n + 63) / 64) <= (1L << 23)) { // bitset rows ≤ 64 MB total
       val words = (n + 63) >>> 6
       val adj = new Array[Long](n * words)
-      i = 0
-      while (i < canon.length) {
-        val u = us(i); val v = vs(i)
-        adj(u * words + (v >>> 6)) |= 1L << (v & 63)
-        adj(v * words + (u >>> 6)) |= 1L << (u & 63)
-        i += 1
+      for (i <- us.indices) {
+        adj(us(i) * words + (vs(i) >>> 6)) |= 1L << (vs(i) & 63)
+        adj(vs(i) * words + (us(i) >>> 6)) |= 1L << (us(i) & 63)
       }
-      i = 0
-      while (i < canon.length) {
-        val ou = us(i) * words; val ov = vs(i) * words
-        var s = 0L; var w = 0
-        while (w < words) { s += java.lang.Long.bitCount(adj(ou + w) & adj(ov + w)); w += 1 }
-        sup(i) = s
-        i += 1
+      Array.tabulate(us.length) { i =>
+        val (ou, ov) = (us(i) * words, vs(i) * words)
+        var s = 0L
+        for (w <- 0 until words) s += java.lang.Long.bitCount(adj(ou + w) & adj(ov + w))
+        s
       }
     } else {
-      // sorted neighbor arrays + two-pointer intersection
-      val deg = new Array[Int](n)
-      i = 0; while (i < canon.length) { deg(us(i)) += 1; deg(vs(i)) += 1; i += 1 }
-      val off = new Array[Int](n + 1)
-      i = 0; while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val nbr = new Array[Int](2 * canon.length)
-      val fill = java.util.Arrays.copyOf(off, n)
-      i = 0
-      while (i < canon.length) {
-        val u = us(i); val v = vs(i)
-        nbr(fill(u)) = v; fill(u) += 1
-        nbr(fill(v)) = u; fill(v) += 1
-        i += 1
-      }
-      i = 0
-      while (i < n) { java.util.Arrays.sort(nbr, off(i), off(i + 1)); i += 1 }
-      i = 0
-      while (i < canon.length) {
-        val u = us(i); val v = vs(i)
-        var a = off(u); val ae = off(u + 1)
-        var b = off(v); val be = off(v + 1)
+      val g = LocalGraph.csr(n, us ++ vs, vs ++ us, loops = false)
+      Array.tabulate(us.length) { i =>
+        var a = g.off(us(i)); val ae = g.off(us(i) + 1)
+        var b = g.off(vs(i)); val be = g.off(vs(i) + 1)
         var s = 0L
         while (a < ae && b < be) {
-          val x = nbr(a); val y = nbr(b)
-          if (x == y) { s += 1; a += 1; b += 1 }
-          else if (x < y) a += 1
-          else b += 1
+          val (x, y) = (g.nbr(a), g.nbr(b))
+          if (x <= y) a += 1
+          if (y <= x) b += 1
+          if (x == y) s += 1
         }
-        sup(i) = s
-        i += 1
+        s
       }
     }
-    sup
-  }
 
   /** [[edgeSupport]] over an ALREADY-CANONICAL (u < v, simple, loop-free)
     * undirected edge table — the per-round primitive of the [[KTruss]]

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Graph
+import graft.core.{Graph, LocalGraph}
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,7 +74,7 @@ object GraphQueries {
       // Cap-guarded local finish (union-find, identical min-id labels):
       // O(diameter) supersteps are pure job latency on the derived gate
       // graph; the distributed path runs unchanged above the budget.
-      ConnectedComponents.run(graph(spark, dir), localFinishEdges = 2000000L)
+      ConnectedComponents.run(graph(spark, dir), localFinishEdges = LocalGraph.QueryCap)
         .components
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -95,7 +95,7 @@ object GraphQueries {
       // all-pairs job answers it exactly; above the budget the sweep
       // computer runs unchanged.
       val r = SumSweep.compute(graph(spark, dir), SumSweep.Output.AllForward,
-        components = Some(sccShared(spark, dir)), localFinishEdges = 2000000L)
+        components = Some(sccShared(spark, dir)), localFinishEdges = LocalGraph.QueryCap)
       r.ecc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
       r
     }
@@ -441,13 +441,13 @@ object GraphQueries {
     // from-scratch labels on the tiny derived snapshot are latency-bound
     // on O(diameter) supersteps distributed, one union-find pass local.
     val old = ConnectedComponents.run(Graph.fromEdges(a),
-      localFinishEdges = 2000000L).components
+      localFinishEdges = LocalGraph.QueryCap).components
     // The repair graph is O(delta) by design — route it through the same
     // cap-guarded driver union-find budget the near-dup pair graphs use
     // (d_embed_neardup); above the budget the distributed path runs, so
     // this is scale-adaptive, not a small-graph assumption.
     val out = ConnectedComponents.incremental(old, a, b,
-      localFinishEdges = 2000000L).components
+      localFinishEdges = LocalGraph.QueryCap).components
     a.unpersist()
     out
   }
@@ -1250,7 +1250,7 @@ object GraphQueries {
   private def supportShared(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, s"support:$dir") {
       val df = TriangleCount.edgeSupport(graph(spark, dir),
-        localFinishEdges = 2000000L)
+        localFinishEdges = LocalGraph.QueryCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
@@ -1514,7 +1514,7 @@ object GraphQueries {
     memoized(spark, s"essu:$dir") {
       SumSweep.computeUndirected(symGraph(spark, dir),
         SumSweep.Output.AllForward, components = Some(ccShared(spark, dir)),
-        localFinishEdges = 2000000L)
+        localFinishEdges = LocalGraph.QueryCap)
         .ecc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -1861,7 +1861,7 @@ object GraphQueries {
   /** Label propagation, fixed sync iterations, deterministic tie-breaks. */
   def lp(iters: Int)(spark: SparkSession, dir: String): DataFrame =
     LabelPropagation.run(graph(spark, dir), maxIter = iters,
-      localFinishEdges = 2000000L).labels
+      localFinishEdges = LocalGraph.QueryCap).labels
 
   /** LP stage chain (sym → symnl → lab0 → votes/win/lab per iteration),
     * assuming `edges`/`nodes` CTEs are in scope — FACTORED so
@@ -2080,7 +2080,7 @@ object GraphQueries {
   /** k-truss ([[KTruss.run]]): surviving edges with in-truss support. */
   def ktruss(spark: SparkSession, dir: String): DataFrame =
     KTruss.run(trussGraph(spark, dir), k = TrussK,
-      localFinishEdges = 2000000L).truss
+      localFinishEdges = LocalGraph.QueryCap).truss
 
   /** Oracle: the same synchronous peel, unrolled — each round counts
     * every surviving edge's common neighbors over the symmetric closure
@@ -2137,7 +2137,7 @@ object GraphQueries {
     */
   def mis(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Mis.run(sparseGraph(spark, dir), salt = "mis",
-      localFinishEdges = 2000000L).mis
+      localFinishEdges = LocalGraph.QueryCap).mis
 
   /** Oracle: the same synchronous local-minima rounds, unrolled — a
     * vertex wins round i iff no LIVE neighbor has a smaller (hash, id)
@@ -2186,7 +2186,7 @@ object GraphQueries {
   private def sparseLpShared(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, s"klp:$dir") {
       val l = LabelPropagation.run(sparseGraph(spark, dir), maxIter = 3,
-        localFinishEdges = 2000000L).labels
+        localFinishEdges = LocalGraph.QueryCap).labels
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       l.count() // modularity's algebra scans the labels 3× (persist race)
       l
@@ -2289,7 +2289,7 @@ object GraphQueries {
     */
   def louvain(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Louvain.run(sparseGraph(spark, dir), rounds = LouvainRounds,
-      localFinishEdges = 2000000L).labels
+      localFinishEdges = LocalGraph.QueryCap).labels
 
   /** Oracle: the move rounds unrolled — per round the community-stats
     * (volume, size, min member) and k(i,c) aggregates, the own-community

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.LocalGraph
 import graft.ingest.{LinkExtract, UrlNorm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -221,7 +222,7 @@ object IngestQueries {
     // distributed, and the budget routes a real 10⁷-host graph to the
     // distributed path unchanged.
     graft.operators.ConnectedComponents.run(graft.core.Graph.fromEdges(edges),
-      localFinishEdges = 2000000L).components
+      localFinishEdges = LocalGraph.QueryCap).components
       .join(hosts, Seq("id"))
       .join(hosts.select(col("id").as("comp"), col("host").as("comp_host")), Seq("comp"))
       .select(col("host"), col("comp_host"))
@@ -568,7 +569,7 @@ object IngestQueries {
   def coloring(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Coloring.run(
       graft.core.Graph.fromEdges(links(spark, dir)), salt = "col",
-      localFinishEdges = 2000000L).colors
+      localFinishEdges = LocalGraph.QueryCap).colors
 
   private val ColoringRounds = 20
 

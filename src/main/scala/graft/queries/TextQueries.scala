@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.LocalGraph
 import graft.similarity.VectorSim
 import graft.text.{Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1593,7 +1594,7 @@ object TextQueries {
       val g = graft.core.Graph.fromEdges(
         pairs.select(col("a").as("src"), col("b").as("dst")))
       graft.operators.ConnectedComponents.run(g,
-        localFinishEdges = 2000000L).components
+        localFinishEdges = LocalGraph.QueryCap).components
     }
 
   def embedNearDup(spark: SparkSession, dir: String): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.core.Graph
+import graft.core.{Graph, LocalGraph}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +40,31 @@ class LocalTwinSpec extends AnyFunSuite {
       ids.foreach { id =>
         assert(Mis.keyOfLocal(id, salt) === fromCol(id), s"id=$id salt=$salt")
       }
+    }
+  }
+
+  test("LocalGraph: ids and views equal a naive rebuild; the cap is edge-exact") {
+    for (es <- fixtures) {
+      val graph = Graph.fromPairs(spark, es)
+      val ids = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      def naive(arcs: Seq[(Long, Long)]) =
+        ids.map(u => arcs.filter(_._1 == u).map(_._2).distinct.sorted)
+      val simple = (es ++ es.map(_.swap)).filter(e => e._1 != e._2)
+      for (g <- Seq(LocalGraph(graph), LocalGraph(es.map(_._1).toArray, es.map(_._2).toArray))) {
+        def lists(c: LocalGraph.Csr) =
+          ids.indices.map(u => (c.off(u) until c.off(u + 1)).map(p => ids(c.nbr(p))))
+        assert(g.ids.toSeq === ids)
+        assert(ids.indices.forall(i => g.index(ids(i)) == i))
+        assert(lists(g.forward) === naive(es))
+        assert(lists(g.transpose) === naive(es.map(_.swap)))
+        assert(lists(g.symmetric) === naive(simple))
+        val (us, vs) = g.canonical
+        assert(us.indices.map(i => (ids(us(i)), ids(vs(i)))) ===
+          simple.filter(e => e._1 < e._2).distinct.sorted)
+      }
+      val m = graph.numEdges
+      assert(LocalGraph.fits(graph, m), s"cap = $m edges")
+      assert(!LocalGraph.fits(graph, m - 1) && !LocalGraph.fits(graph, 0))
     }
   }
 
